@@ -1,4 +1,4 @@
-"""CDC batch apply: normalize -> salted LWW pre-reduce -> LSN-guarded merge.
+"""CDC batch apply: LWW pre-reduce -> normalize winners -> LSN-guarded merge.
 
 This is the engine's replacement for the reference's
 extract -> pandas-transform -> staging bulk_insert -> SQL upsert chain
@@ -12,10 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.normalize import normalize_text_expr
-from ..lakehouse.table import DELETED_COL, LSN_COL, LakeTable
-
-EVENT_META_COLS = ("pos", "op", "lsn")
-
+from ..lakehouse.table import BUCKET_COL, CommitConflict, LakeTable
 
 #: stats columns carried through the reduce so batch bookkeeping (raw event
 #: count, LSN range) never needs a second scan of the raw log.
@@ -23,11 +20,7 @@ STATS_COLS = ("_cnt", "_lmin", "_lmax")
 
 
 def salted_lww_reduce(
-    events: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-    n_salts: int = 1,
-    carry_stats: bool = False,
+    events: DataFrame, key_cols: list[str], lsn_col: str = "lsn"
 ) -> DataFrame:
     """Last-writer-wins reduction, skew-safe by construction.
 
@@ -37,52 +30,40 @@ def salted_lww_reduce(
     before the shuffle, so the reducer for that key sees at most
     ``n_map_partitions`` rows regardless of how many billions of events the
     key had — measured 3x faster than an explicit two-phase salted reduce
-    on a 200k-event batch, and the bound holds at any scale. This is why
-    the default is the single ``groupBy(key)``.
+    on a 200k-event batch, and the bound holds at any scale. The salted
+    *repartition* defense for joins lives in the merge path's union-agg
+    design, which turns the target-vs-source join into a hash aggregation
+    for the same reason (``lakehouse.table.merge_cdc`` step 3).
 
-    ``n_salts > 1`` adds the explicit two-phase variant — groupBy
-    (key, salt) with salt = hash(lsn), then resolve the ``n_salts``
-    candidates — needed only when the per-key aggregation state is too big
-    for partial combine (e.g. collect_list payloads) or the planner falls
-    back to sort-based aggregation, where map-side combine no longer
-    bounds reduce-side width. The salted *repartition* defense for joins
-    lives in the merge path's union-agg design, which turns the
-    target-vs-source join into a hash aggregation for the same reason
-    (``lakehouse.table.merge_cdc`` step 3).
-
-    With ``carry_stats`` the output also has ``_cnt``/``_lmin``/``_lmax``
-    (events folded into each winner + LSN range), so per-batch lineage
-    stats are a cheap re-aggregation of the reduced frame instead of a
-    second full scan of the raw log.
+    The output also has ``_cnt``/``_lmin``/``_lmax`` (events folded into
+    each winner + LSN range), so per-batch lineage stats are a cheap
+    re-aggregation of the reduced frame instead of a second full scan of
+    the raw log.
     """
-    cols = [F.col(c) for c in events.columns]
-    pack = F.struct(*cols)
-
-    def lww_agg(df: DataFrame, group_cols: list, first_phase: bool) -> DataFrame:
-        aggs = [F.max_by(pack, F.col(lsn_col)).alias("_w")]
-        if first_phase:
-            aggs += [
-                F.count("*").alias("_cnt"),
-                F.min(lsn_col).alias("_lmin"),
-                F.max(lsn_col).alias("_lmax"),
-            ]
-        else:
-            aggs += [
-                F.sum("_cnt").alias("_cnt"),
-                F.min("_lmin").alias("_lmin"),
-                F.max("_lmax").alias("_lmax"),
-            ]
-        return df.groupBy(*group_cols).agg(*aggs).select("_w.*", *STATS_COLS)
-
-    if n_salts <= 1:
-        out = lww_agg(events, list(key_cols), first_phase=True)
-    else:
-        salted = events.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salts))
+    pack = F.struct(*[F.col(c) for c in events.columns])
+    return (
+        events.groupBy(*key_cols)
+        .agg(
+            F.max_by(pack, F.col(lsn_col)).alias("_w"),
+            F.count("*").alias("_cnt"),
+            F.min(lsn_col).alias("_lmin"),
+            F.max(lsn_col).alias("_lmax"),
         )
-        phase1 = lww_agg(salted, [*key_cols, "_salt"], first_phase=True)
-        out = lww_agg(phase1, list(key_cols), first_phase=False)
-    return out if carry_stats else out.drop(*STATS_COLS)
+        .select("_w.*", *STATS_COLS)
+    )
+
+
+def _normalize_text(df: DataFrame) -> DataFrame:
+    """Normalize the ``text`` payload of non-delete events. Tombstone text
+    is never normalized (deletes blank their payload downstream anyway)."""
+    if "text" not in df.columns:
+        return df
+    return df.withColumn(
+        "text",
+        F.when(F.col("op") == "D", F.col("text")).otherwise(
+            normalize_text_expr("text")
+        ),
+    )
 
 
 def prepare_events(events: DataFrame, normalize: bool = True) -> DataFrame:
@@ -93,21 +74,13 @@ def prepare_events(events: DataFrame, normalize: bool = True) -> DataFrame:
     out = events.drop("pos") if "pos" in events.columns else events
     if "lsn" in out.columns:
         out = out.filter(F.col("lsn").isNotNull())
-    if normalize and "text" in out.columns:
-        out = out.withColumn(
-            "text",
-            F.when(F.col("op") == "D", F.col("text")).otherwise(
-                normalize_text_expr("text")
-            ),
-        )
-    return out
+    return _normalize_text(out) if normalize else out
 
 
 def _reduce_with_stats(
     table: LakeTable,
     events: DataFrame,
     normalize: bool = True,
-    n_salts: int = 1,
 ) -> tuple[DataFrame, tuple, list[int], tuple, dict]:
     """Run the batch's table-independent half: LWW reduce -> normalize
     WINNERS -> persist, plus ONE driver action serving lineage stats,
@@ -132,29 +105,16 @@ def _reduce_with_stats(
     term. The tests' independent oracle (``expected_final_state``) keeps
     the normalize-first order, so replay-equality tests prove the
     commutation rather than assume it."""
-    from ..lakehouse.table import BUCKET_COL
-
     prepared = prepare_events(events, normalize=False)
     # null-key events have no merge identity (merge_cdc would exclude them
     # anyway); filtering BEFORE the reduce keeps the fused lineage stats,
     # touched-bucket set, and key range counting only appliable events.
     for k in table.key_cols:
         prepared = prepared.filter(F.col(k).isNotNull())
-    reduced = salted_lww_reduce(
-        prepared, table.key_cols, n_salts=n_salts, carry_stats=True
-    )
-    if normalize and "text" in reduced.columns:
-        # same guard prepare_events applies: tombstone text is never
-        # normalized (deletes blank their payload downstream anyway)
-        reduced = reduced.withColumn(
-            "text",
-            F.when(F.col("op") == "D", F.col("text")).otherwise(
-                normalize_text_expr("text")
-            ),
-        )
-    reduced = reduced.withColumn(
-        BUCKET_COL, table._bucket_id()
-    ).persist()
+    reduced = salted_lww_reduce(prepared, table.key_cols)
+    if normalize:
+        reduced = _normalize_text(reduced)
+    reduced = reduced.withColumn(BUCKET_COL, table._bucket_id()).persist()
     prune_key = table.key_cols[0]
     rows = (
         reduced.groupBy(BUCKET_COL)
@@ -203,16 +163,14 @@ def _merge_reduced(
     concurrency retry loop. A ``CommitConflict`` (another writer — e.g. a
     concurrent compaction — published first) refreshes the snapshot and
     retries the merge against the new base, bounded by ``commit_retries``.
-    The fence check re-runs on refresh, so a retried batch that the other
-    writer already applied stays exactly-once.
+    ``merge_cdc`` checks the fence first on every attempt, so a retried
+    batch that the other writer already applied stays exactly-once.
 
     On retry the precomputed ``touched``/``key_range``/``bucket_ranges``
     are DISCARDED (merge_cdc recomputes them from the still-persisted
     reduce): the conflicting commit may have been a bucket-count-evolution
     compact, under whose new spec the old bucket ids would prune to the
     wrong files and leave stale key versions unrewritten."""
-    from ..lakehouse.table import CommitConflict
-
     src = reduced.drop(*STATS_COLS)
     for attempt in range(commit_retries + 1):
         try:
@@ -230,14 +188,6 @@ def _merge_reduced(
             if attempt == commit_retries:
                 raise
             table.refresh()
-            if fence is not None:
-                last = table.summary.get(f"fence:{fence[0]}")
-                if last is not None and int(last) >= int(fence[1]):
-                    return {
-                        "applied": False,
-                        "reason": "fenced",
-                        "batch_id": fence[1],
-                    }
 
 
 def apply_batch(
@@ -246,21 +196,20 @@ def apply_batch(
     events: DataFrame,
     fence: tuple[str, int] | None = None,
     normalize: bool = True,
-    n_salts: int = 1,
     commit_retries: int = 2,
 ) -> dict:
     """Apply one micro-batch of change events to ``table`` exactly-once.
 
     The reduced batch is persisted so the plan runs ONCE
     (``_reduce_with_stats``), then merged under the LSN guard with
-    conflict retries (``_merge_reduced``).
+    conflict retries (``_merge_reduced``). A batch the table's fence
+    already covers returns before the reduce runs.
     """
-    if fence is not None:
-        last = table.summary.get(f"fence:{fence[0]}")
-        if last is not None and int(last) >= int(fence[1]):
-            return {"applied": False, "reason": "fenced", "batch_id": fence[1]}
+    skipped = table.fenced(fence)
+    if skipped is not None:
+        return skipped
     reduced, stats, touched, key_range, bucket_ranges = _reduce_with_stats(
-        table, events, normalize=normalize, n_salts=n_salts
+        table, events, normalize=normalize
     )
     try:
         return _merge_reduced(
@@ -278,7 +227,6 @@ def apply_batches_pipelined(
     stream_id: str = "replay",
     first_batch_id: int = 0,
     normalize: bool = True,
-    n_salts: int = 1,
     commit_retries: int = 2,
 ) -> list[dict]:
     """Apply an ordered sequence of micro-batches with one-batch lookahead.
@@ -296,8 +244,8 @@ def apply_batches_pipelined(
     commit turnaround.
 
     Exactly-once semantics are IDENTICAL to a serial ``apply_batch`` loop:
-    fences are still checked (and re-checked under conflict retry) at merge
-    time, in order. The replay/backfill path uses this; the continuous
+    ``merge_cdc`` still checks each fence (again under conflict retry) at
+    merge time, in order. The replay/backfill path uses this; the continuous
     streaming path (``CdcStreamIngestor``) receives batches one at a time
     from Structured Streaming and keeps the serial call.
     """
@@ -310,14 +258,12 @@ def apply_batches_pipelined(
     fut = None
     with ThreadPoolExecutor(max_workers=1, thread_name_prefix="cdc-prefetch") as pool:
         try:
-            fut = pool.submit(
-                _reduce_with_stats, table, batches[0], normalize, n_salts
-            )
+            fut = pool.submit(_reduce_with_stats, table, batches[0], normalize)
             for i in range(len(batches)):
                 reduced, stats, touched, key_range, bucket_ranges = fut.result()
                 if i + 1 < len(batches):
                     fut = pool.submit(
-                        _reduce_with_stats, table, batches[i + 1], normalize, n_salts
+                        _reduce_with_stats, table, batches[i + 1], normalize
                     )
                 else:
                     fut = None
@@ -332,18 +278,12 @@ def apply_batches_pipelined(
                     retired = None
                 fence = (stream_id, first_batch_id + i)
                 try:
-                    last = table.summary.get(f"fence:{fence[0]}")
-                    if last is not None and int(last) >= int(fence[1]):
-                        results.append(
-                            {"applied": False, "reason": "fenced", "batch_id": fence[1]}
+                    results.append(
+                        _merge_reduced(
+                            table, spark, reduced, fence, stats, touched,
+                            key_range, commit_retries, bucket_ranges,
                         )
-                    else:
-                        results.append(
-                            _merge_reduced(
-                                table, spark, reduced, fence, stats, touched,
-                                key_range, commit_retries, bucket_ranges,
-                            )
-                        )
+                    )
                 finally:
                     retired = reduced
         finally:

@@ -25,7 +25,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .table import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable
+from .table import DELETED_COL, LSN_COL, LakeTable
 
 
 def refresh_summary(
@@ -39,28 +39,10 @@ def refresh_summary(
     commit records ``op="refresh_summary"`` lineage, and the previous
     contents stay reachable via time travel until snapshots expire.
     """
-    t0 = time.time()
-    schema = summary._evolved_schema(result.schema)
-    out = result
-    for f in schema.fields:
-        if f.name not in result.columns:
-            out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-    out = out.select([f.name for f in schema.fields]).withColumn(
-        BUCKET_COL, summary._bucket_id()
-    )
-    new_files = summary._write_buckets(out, summary.num_buckets)
-    summary._commit(
-        new_files,  # full replacement: ONLY the new files
-        schema,
-        summary.summary,
-        {
-            "op": "refresh_summary",
-            "rows_written": sum(f.get("rows", 0) for f in new_files),
-            "buckets": sorted({f["bucket"] for f in new_files}),
-            "wall_s": round(time.time() - t0, 3),
-        },
-    )
+    # full replacement: ONLY the new files
+    new_files = summary._write_rows(result, [], "refresh_summary")
     return {"files": len(new_files), "version": summary.version}
+
 
 #: lineage ops that rearrange files without changing table CONTENT — their
 #: snapshot diffs must NOT invalidate summary groups (a compaction touches
@@ -84,6 +66,22 @@ def _as_events(fresh: DataFrame, vanished: DataFrame, lsn: int) -> DataFrame:
     return ups.unionByName(dels, allowMissingColumns=True).withColumn(
         "lsn", F.lit(int(lsn)).cast("long")
     )
+
+
+def _advance_watermark(
+    summary: LakeTable, stream_id: str, cur: int, t0: float, reason: str
+) -> dict[str, Any]:
+    """No-op refresh: move the watermark to base version ``cur`` in a
+    content-free ``mv_watermark`` commit, so the next refresh diffs from
+    there."""
+    summary._commit(
+        summary.files,
+        summary.schema,
+        {**summary.summary, f"fence:{stream_id}": cur},
+        {"op": "mv_watermark", "rows_written": 0, "buckets": [],
+         "wall_s": round(time.time() - t0, 3)},
+    )
+    return {"mode": "noop", "reason": reason, "watermark": cur}
 
 
 def refresh_summary_incremental(
@@ -192,14 +190,7 @@ def refresh_summary_incremental(
         ):
             mor_data_commit = True
     if not added and not removed:
-        summary._commit(
-            summary.files,
-            summary.schema,
-            {**summary.summary, f"fence:{stream_id}": cur},
-            {"op": "mv_watermark", "rows_written": 0, "buckets": [],
-             "wall_s": round(time.time() - t0, 3)},
-        )
-        return {"mode": "noop", "reason": "no_data_commits", "watermark": cur}
+        return _advance_watermark(summary, stream_id, cur, t0, "no_data_commits")
     # diffed files must still exist (vacuum may have reclaimed removed ones)
     for f in added + removed:
         if not os.path.exists(os.path.join(base.path, f["path"])):
@@ -233,130 +224,111 @@ def refresh_summary_incremental(
         removed_raw = removed_raw.persist()
         persisted.append(removed_raw)
     try:
-        return _incremental_body(
-            spark, summary, base, build, group_cols, ident, stream_id,
-            cur, t0, live, keys, lsn_n, added_raw, removed_raw,
-            added, removed, mor_data_commit, wm, persisted,
+        a_max = added_raw.select(*keys, lsn_n).groupBy(*keys).agg(F.max("_l").alias("_a"))
+        if removed_raw is not None:
+            r_max = (
+                removed_raw.select(*keys, lsn_n).groupBy(*keys).agg(F.max("_l").alias("_r"))
+            )
+            changed_keys = (
+                a_max.join(r_max, on=keys, how="full_outer")
+                .filter(~F.col("_a").eqNullSafe(F.col("_r")))
+                .select(*keys)
+            )
+        else:
+            changed_keys = a_max.select(*keys)
+        changed_keys = changed_keys.persist()
+        persisted.append(changed_keys)
+
+        # ---- affected group keys: new + old groups of exactly-changed keys ------
+        parts = [
+            ident(added_raw.filter(live).join(changed_keys, on=keys, how="left_semi"))
+            .select(*group_cols)
+        ]
+        if removed_raw is not None:
+            # COW pre-images: the changed keys' previous rows (old group of a
+            # group-moving update; deleted rows' group) live in removed files.
+            parts.append(
+                ident(removed_raw.join(changed_keys, on=keys, how="left_semi"))
+                .select(*group_cols)
+            )
+        if mor_data_commit:
+            # MOR commits remove no files, so pre-image groups come from the
+            # watermark snapshot instead: key-pruned scan + semi-join.
+            old = base.at_version(wm)
+            lead = keys[0]
+            kr = changed_keys.agg(F.min(lead), F.max(lead)).collect()[0]
+            pre = old.read(spark, ranges={lead: (kr[0], kr[1])} if kr[0] is not None else None)
+            parts.append(
+                ident(pre.join(changed_keys, on=keys, how="left_semi")).select(*group_cols)
+            )
+        affected = parts[0]
+        for p in parts[1:]:
+            affected = affected.unionByName(p)
+        # NULL group keys are rejected at the summary boundary (merge_cdc
+        # raises on NULL key columns), so a bootstrap/full build whose
+        # groupBy produces a NULL group fails LOUDLY and the fix belongs in
+        # build()/derive() (coalesce or filter the null-able group source).
+        # Dropping them here is therefore consistent, not silent staleness:
+        # no NULL-group summary row can exist for this drop to strand.
+        affected = affected.na.drop(subset=group_cols).distinct().persist()
+        persisted.append(affected)
+        # ONE action over the (small, persisted) affected set computes
+        # everything the rest of the refresh needs from it: the empty check,
+        # the leading-group min/max (base-scan file pruning AND the summary
+        # merge's key_range), and — when the summary's bucket columns are
+        # group columns — the touched summary buckets. Passing these into
+        # merge_cdc (with stats and assume_deduped) removes its two
+        # full-plan driver actions and its LWW shuffle: the events frame is
+        # one row per group by construction (fresh ∪ disjoint vanished).
+        aggs = [F.count("*"), F.min(group_cols[0]), F.max(group_cols[0])]
+        buckets_known = set(summary.bucket_cols) <= set(group_cols)
+        sel = affected
+        if buckets_known:
+            sel = affected.withColumn(
+                "_b", summary._bucket_id()
+            )
+            aggs.append(F.collect_set("_b"))
+        row = sel.agg(*aggs).collect()[0]
+        n_affected, glo, ghi = int(row[0]), row[1], row[2]
+        touched = sorted(int(b) for b in row[3]) if buckets_known else None
+        if n_affected == 0:
+            return _advance_watermark(summary, stream_id, cur, t0, "no_affected_groups")
+
+        # ---- recompute only the affected groups ----------------------------
+        ranges = None
+        if group_cols[0] == base.key_cols[0] and glo is not None:
+            ranges = {group_cols[0]: (glo, ghi)}
+        subset = ident(base.read(spark, ranges=ranges)).join(
+            F.broadcast(affected), on=group_cols, how="left_semi"
         )
+        fresh = build(subset)
+        missing = [c for c in group_cols if c not in fresh.columns]
+        if missing:
+            raise ValueError(f"build() output missing group columns {missing}")
+        vanished = affected.join(
+            fresh.select(*group_cols), on=group_cols, how="left_anti"
+        )
+        # |events| == n_affected exactly: every affected group is either
+        # recomputed (fresh) or vanished — disjoint by the anti-join.
+        res = summary.merge_cdc(
+            spark,
+            _as_events(fresh, vanished, cur),
+            fence=(stream_id, cur),
+            assume_deduped=True,
+            stats=(cur, cur, n_affected),
+            touched=touched,
+            key_range=(glo, ghi),
+        )
+        res.update(
+            {
+                "mode": "incremental",
+                "watermark": cur,
+                "affected_groups": n_affected,
+                "changed_files_read": len(added) + len(removed),
+                "wall_s": round(time.time() - t0, 3),
+            }
+        )
+        return res
     finally:
         for df_ in persisted:
             df_.unpersist()
-
-
-def _incremental_body(
-    spark, summary, base, build, group_cols, ident, stream_id,
-    cur, t0, live, keys, lsn_n, added_raw, removed_raw,
-    added, removed, mor_data_commit, wm, persisted,
-):
-    a_max = added_raw.select(*keys, lsn_n).groupBy(*keys).agg(F.max("_l").alias("_a"))
-    if removed_raw is not None:
-        r_max = (
-            removed_raw.select(*keys, lsn_n).groupBy(*keys).agg(F.max("_l").alias("_r"))
-        )
-        changed_keys = (
-            a_max.join(r_max, on=keys, how="full_outer")
-            .filter(~F.col("_a").eqNullSafe(F.col("_r")))
-            .select(*keys)
-        )
-    else:
-        changed_keys = a_max.select(*keys)
-    changed_keys = changed_keys.persist()
-    persisted.append(changed_keys)
-
-    # ---- affected group keys: new + old groups of exactly-changed keys ------
-    parts = [
-        ident(added_raw.filter(live).join(changed_keys, on=keys, how="left_semi"))
-        .select(*group_cols)
-    ]
-    if removed_raw is not None:
-        # COW pre-images: the changed keys' previous rows (old group of a
-        # group-moving update; deleted rows' group) live in removed files.
-        parts.append(
-            ident(removed_raw.join(changed_keys, on=keys, how="left_semi"))
-            .select(*group_cols)
-        )
-    if mor_data_commit:
-        # MOR commits remove no files, so pre-image groups come from the
-        # watermark snapshot instead: key-pruned scan + semi-join.
-        old = base.at_version(wm)
-        lead = keys[0]
-        kr = changed_keys.agg(F.min(lead), F.max(lead)).collect()[0]
-        pre = old.read(spark, ranges={lead: (kr[0], kr[1])} if kr[0] is not None else None)
-        parts.append(
-            ident(pre.join(changed_keys, on=keys, how="left_semi")).select(*group_cols)
-        )
-    affected = parts[0]
-    for p in parts[1:]:
-        affected = affected.unionByName(p)
-    # NULL group keys are rejected at the summary boundary (merge_cdc
-    # raises on NULL key columns), so a bootstrap/full build whose
-    # groupBy produces a NULL group fails LOUDLY and the fix belongs in
-    # build()/derive() (coalesce or filter the null-able group source).
-    # Dropping them here is therefore consistent, not silent staleness:
-    # no NULL-group summary row can exist for this drop to strand.
-    affected = affected.na.drop(subset=group_cols).distinct().persist()
-    persisted.append(affected)
-    # ONE action over the (small, persisted) affected set computes
-    # everything the rest of the refresh needs from it: the empty check,
-    # the leading-group min/max (base-scan file pruning AND the summary
-    # merge's key_range), and — when the summary's bucket columns are
-    # group columns — the touched summary buckets. Passing these into
-    # merge_cdc (with stats and assume_deduped) removes its two
-    # full-plan driver actions and its LWW shuffle: the events frame is
-    # one row per group by construction (fresh ∪ disjoint vanished).
-    aggs = [F.count("*"), F.min(group_cols[0]), F.max(group_cols[0])]
-    buckets_known = set(summary.bucket_cols) <= set(group_cols)
-    sel = affected
-    if buckets_known:
-        sel = affected.withColumn(
-            "_b", summary._bucket_id()
-        )
-        aggs.append(F.collect_set("_b"))
-    row = sel.agg(*aggs).collect()[0]
-    n_affected, glo, ghi = int(row[0]), row[1], row[2]
-    touched = sorted(int(b) for b in row[3]) if buckets_known else None
-    if n_affected == 0:
-        summary._commit(
-            summary.files,
-            summary.schema,
-            {**summary.summary, f"fence:{stream_id}": cur},
-            {"op": "mv_watermark", "rows_written": 0, "buckets": [],
-             "wall_s": round(time.time() - t0, 3)},
-        )
-        return {"mode": "noop", "reason": "no_affected_groups", "watermark": cur}
-
-    # ---- recompute only the affected groups ----------------------------
-    ranges = None
-    if group_cols[0] == base.key_cols[0] and glo is not None:
-        ranges = {group_cols[0]: (glo, ghi)}
-    subset = ident(base.read(spark, ranges=ranges)).join(
-        F.broadcast(affected), on=group_cols, how="left_semi"
-    )
-    fresh = build(subset)
-    missing = [c for c in group_cols if c not in fresh.columns]
-    if missing:
-        raise ValueError(f"build() output missing group columns {missing}")
-    vanished = affected.join(
-        fresh.select(*group_cols), on=group_cols, how="left_anti"
-    )
-    # |events| == n_affected exactly: every affected group is either
-    # recomputed (fresh) or vanished — disjoint by the anti-join.
-    res = summary.merge_cdc(
-        spark,
-        _as_events(fresh, vanished, cur),
-        fence=(stream_id, cur),
-        assume_deduped=True,
-        stats=(cur, cur, n_affected),
-        touched=touched,
-        key_range=(glo, ghi),
-    )
-    res.update(
-        {
-            "mode": "incremental",
-            "watermark": cur,
-            "affected_groups": n_affected,
-            "changed_files_read": len(added) + len(removed),
-            "wall_s": round(time.time() - t0, 3),
-        }
-    )
-    return res

@@ -16,9 +16,8 @@ lake scale:
   SAME function Spark's ``repartition(n, cols)`` uses for partition ids, so
   a COW merge's single explicit repartition is simultaneously the
   resolution agg's required distribution AND the write layout; see
-  ``_bucket_expr``/``merge_cdc``; pre-round-4 tables recorded xxhash64 and
-  keep it). A CDC merge reads and
-  rewrites only the files whose manifest key-range intersects the batch,
+  ``_bucket_expr``/``merge_cdc``). A CDC merge reads and rewrites only the
+  files whose manifest key-range intersects the batch,
   within only the buckets the batch touches — explicit partition AND file
   pruning, the scale replacement for the reference's B-tree indexes
   (``/root/reference/sql/schema.sql:248-260``). Write amplification per
@@ -114,25 +113,70 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
-def _bucket_expr(bucket_cols: list[str], num_buckets: int, fn: str = "xxhash64"):
+def _publish(path: str, commit: dict[str, Any]) -> None:
+    """Atomically publish ``commit`` as table ``path``'s
+    ``_meta/v<version>.json``; FileExistsError if that version exists.
+
+    flush + fsync BEFORE publishing: os.link makes the name visible
+    atomically, but without the fsync a power loss could surface the name
+    with torn/empty contents — the durability boundary the "atomic
+    commits" claim is about. (_load additionally quarantines any torn
+    commit file left by a crash mid-publish.)"""
+    meta = os.path.join(path, META_DIR)
+    tmp = os.path.join(meta, f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        json.dump(commit, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, os.path.join(meta, f"v{commit['version']:08d}.json"))
+    finally:
+        os.unlink(tmp)
+    _fsync_dir(meta)
+
+
+def _bucket_expr(bucket_cols: list[str], num_buckets: int):
     """Deterministic bucket id for a row; hot keys spread across buckets by
     hashing the full bucket key.
 
-    ``fn="murmur3"`` (the default for tables created since round 4) makes
-    the bucket id EQUAL Spark's own ``HashPartitioning`` partition-id
-    function for ``repartition(num_buckets, *bucket_cols)`` —
+    The id EQUALS Spark's own ``HashPartitioning`` partition-id function
+    for ``repartition(num_buckets, *bucket_cols)`` —
     ``pmod(murmur3(cols, seed=42), n)`` — which is what lets the COW merge
     land its single explicit repartition in bucket-task alignment and skip
     the write-side shuffle entirely (see ``merge_cdc`` step 3). Verified
-    row-exact against ``spark_partition_id()`` in
-    ``tests/test_plans.py``. ``fn="xxhash64"`` is the pre-round-4 layout,
-    kept so existing tables keep resolving their files to the right
-    buckets; the fn is recorded in the partition spec and preserved across
-    bucket-count evolution."""
+    row-exact against ``spark_partition_id()`` in ``tests/test_plans.py``."""
     cols = [F.col(c) for c in bucket_cols]
-    if fn == "murmur3":
-        return F.pmod(F.hash(*cols), F.lit(num_buckets)).cast("int")
-    return F.pmod(F.xxhash64(*cols), F.lit(num_buckets)).cast("int")
+    return F.pmod(F.hash(*cols), F.lit(num_buckets)).cast("int")
+
+
+def _conformed(df: DataFrame, schema: StructType) -> list:
+    """``schema``'s columns selected from ``df``; the ones it lacks (added
+    by a later schema evolution) fill NULL."""
+    return [
+        F.col(f.name) if f.name in df.columns
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ]
+
+
+def _latest_per_key(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The LSN guard: per key, the row with the highest ``(last_lsn,
+    _pri)``. ``_pri`` ranks the sides of a union (1 = already-applied
+    rows, 0 = newer-written ones), so on an equal LSN the applied row
+    wins, making exact replays byte-stable no-ops; ``_pri`` is dropped."""
+    pack = F.struct(*[F.col(c) for c in rows.columns if c != "_pri"])
+    return (
+        rows.groupBy(*keys)
+        .agg(F.max_by(pack, F.struct(F.col(LSN_COL), F.col("_pri"))).alias("_w"))
+        .select("_w.*")
+    )
+
+
+def _delta_depths(files: list[dict[str, Any]]) -> dict[int, int]:
+    """Per-bucket count of delta files in a manifest."""
+    return dict(
+        Counter(f["bucket"] for f in files if f.get("kind", "base") == "delta")
+    )
 
 
 class LakeTable:
@@ -196,8 +240,8 @@ class LakeTable:
             "partition": {
                 "bucket_cols": bucket_cols or [key_cols[0]],
                 "num_buckets": num_buckets,
-                # murmur3 == Spark's HashPartitioning id function, enabling
-                # the aligned single-shuffle COW merge (_bucket_expr doc)
+                # the only layout _bucket_expr computes; _load refuses any
+                # other, whose files would prune against the wrong ids
                 "bucket_fn": "murmur3",
             },
             "files": [],
@@ -206,20 +250,21 @@ class LakeTable:
             "target_file_rows": int(target_file_rows) if target_file_rows else None,
             "lineage": {"op": "create", "rows_written": 0, "buckets": []},
         }
-        tmp = os.path.join(path, META_DIR, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(commit, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        final = os.path.join(path, META_DIR, "v00000001.json")
-        os.link(tmp, final)
-        os.unlink(tmp)
-        _fsync_dir(os.path.join(path, META_DIR))
+        _publish(path, commit)
         return LakeTable(path)
+
+    def _commit_paths(self) -> list[str]:
+        """Published commit files, oldest first."""
+        meta = os.path.join(self.path, META_DIR)
+        return [
+            os.path.join(meta, f)
+            for f in sorted(os.listdir(meta))
+            if f.startswith("v") and f.endswith(".json")
+        ]
 
     def _load(self) -> None:
         meta = os.path.join(self.path, META_DIR)
-        versions = sorted(f for f in os.listdir(meta) if f.startswith("v") and f.endswith(".json"))
+        versions = self._commit_paths()
         if not versions:
             raise FileNotFoundError(f"no commits under {meta}")
         # Torn-commit recovery: a crash between publishing a commit's name
@@ -232,15 +277,25 @@ class LakeTable:
         # files (json.dump completes before os.link publishes the name),
         # so anything torn is a crash artifact and safe to quarantine.
         while versions:
-            name = versions.pop()
-            p = os.path.join(meta, name)
+            p = versions.pop()
             try:
                 with open(p) as fh:
                     self._state = json.load(fh)
-                return
+                break
             except (json.JSONDecodeError, ValueError):
                 os.replace(p, p + f".corrupt-{uuid.uuid4().hex[:8]}")
-        raise FileNotFoundError(f"no intact commits under {meta}")
+        else:
+            raise FileNotFoundError(f"no intact commits under {meta}")
+        # A layout hashed by any other function would resolve its files to
+        # the wrong bucket ids: merges would prune away the files holding a
+        # key's old versions and keep them stale. Refuse it rather than
+        # read it wrong.
+        fn = self._state["partition"].get("bucket_fn")
+        if fn != "murmur3":
+            raise ValueError(
+                f"table {self.path}: unsupported bucket_fn {fn!r} "
+                "(only 'murmur3' layouts can be read)"
+            )
 
     def refresh(self) -> "LakeTable":
         self._load()
@@ -263,13 +318,9 @@ class LakeTable:
         """Drop commit files older than the last ``keep_last`` (never the
         current one). Files referenced only by expired snapshots become
         vacuum-able. Returns number of snapshots removed."""
-        meta = os.path.join(self.path, META_DIR)
-        versions = sorted(
-            f for f in os.listdir(meta) if f.startswith("v") and f.endswith(".json")
-        )
-        doomed = versions[:-max(keep_last, 1)]
-        for name in doomed:
-            os.unlink(os.path.join(meta, name))
+        doomed = self._commit_paths()[:-max(keep_last, 1)]
+        for p in doomed:
+            os.unlink(p)
         return len(doomed)
 
     @property
@@ -292,16 +343,9 @@ class LakeTable:
     def num_buckets(self) -> int:
         return self._state["partition"]["num_buckets"]
 
-    @property
-    def bucket_fn(self) -> str:
-        # absent on pre-round-4 tables -> the original xxhash64 layout
-        return self._state["partition"].get("bucket_fn", "xxhash64")
-
     def _bucket_id(self, num_buckets: int | None = None):
-        """This table's bucket-id expression under its recorded hash fn."""
-        return _bucket_expr(
-            self.bucket_cols, num_buckets or self.num_buckets, self.bucket_fn
-        )
+        """This table's bucket-id expression."""
+        return _bucket_expr(self.bucket_cols, num_buckets or self.num_buckets)
 
     @property
     def merge_mode(self) -> str:
@@ -342,35 +386,27 @@ class LakeTable:
         only valid when ``files`` was written entirely under the new spec
         (bucket-count evolution happens through ``compact``).
         ``extra_state`` merges additional durable table properties (e.g.
-        ``target_file_rows``) into the same atomic commit."""
+        ``target_file_rows``) into the same atomic commit. The summary
+        always gets ``delta_depth_max`` (deepest bucket's delta-file count,
+        i.e. MOR read fan-in): the O(1) signal depth-triggered compaction
+        reads."""
         nxt = dict(self._state)
         if extra_state:
             nxt.update(extra_state)
         nxt["version"] = self.version + 1
         nxt["schema"] = schema.jsonValue()
         nxt["files"] = files
-        nxt["summary"] = summary
+        nxt["summary"] = {
+            **summary,
+            "delta_depth_max": max(_delta_depths(files).values(), default=0),
+        }
         nxt["lineage"] = lineage
         if partition is not None:
             nxt["partition"] = partition
-        tmp = os.path.join(self.path, META_DIR, f".tmp-{uuid.uuid4().hex}")
-        # flush + fsync BEFORE publishing: os.link makes the name visible
-        # atomically, but without the fsync a power loss could surface the
-        # name with torn/empty contents — the durability boundary the
-        # "atomic commits" claim is about. (_load additionally quarantines
-        # any torn commit file left by a crash mid-publish.)
-        with open(tmp, "w") as fh:
-            json.dump(nxt, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        final = os.path.join(self.path, META_DIR, f"v{nxt['version']:08d}.json")
         try:
-            os.link(tmp, final)
+            _publish(self.path, nxt)
         except FileExistsError as exc:  # another writer won the race
-            os.unlink(tmp)
             raise CommitConflict(f"version {nxt['version']} already committed") from exc
-        os.unlink(tmp)
-        _fsync_dir(os.path.join(self.path, META_DIR))
         self._state = nxt
 
     # ------------------------------------------------------------------ read
@@ -403,7 +439,6 @@ class LakeTable:
         resolution instead. Bucket pruning is always safe — a key's every
         version lives in one bucket.
         """
-        schema = self.schema
         sel = self.files
         if buckets is not None:
             want = set(buckets)
@@ -419,7 +454,6 @@ class LakeTable:
         }
         resolve_sel = [f for f in sel if f["bucket"] in delta_buckets]
         plain_sel = [f for f in sel if f["bucket"] not in delta_buckets]
-        has_delta = bool(delta_buckets)
         key_set = set(self.key_cols)
 
         def _prune(files: list, allowed: set[str] | None) -> list:
@@ -450,7 +484,6 @@ class LakeTable:
         # file by a non-key range could discard a key's newest version).
         plain_sel = _prune(plain_sel, None)
         resolve_sel = _prune(resolve_sel, key_set)
-        sel = plain_sel + resolve_sel
 
         def _residual(df: DataFrame, only: set[str] | None = None) -> DataFrame:
             # residual filter: exactness never depends on stats coverage.
@@ -465,13 +498,8 @@ class LakeTable:
                     df = df.filter(F.col(col) <= F.lit(hi))
             return df
 
-        if not has_delta:
-            if not sel:
-                df = spark.createDataFrame([], schema)
-            else:
-                paths = [os.path.join(self.path, f["path"]) for f in sel]
-                df = spark.read.schema(schema).parquet(*paths)
-            df = _residual(df)
+        if not delta_buckets:
+            df = _residual(self._read_file_entries(spark, plain_sel))
         else:
             base = [f for f in resolve_sel if f.get("kind", "base") == "base"]
             delta = [f for f in resolve_sel if f.get("kind", "base") == "delta"]
@@ -485,18 +513,7 @@ class LakeTable:
                 )
             )
             # key-column filters are safe BEFORE resolution (per-key groups)
-            u = _residual(u, only=key_set)
-            keys = self.key_cols
-            pack = F.struct(*[F.col(c) for c in u.columns if c != "_pri"])
-            df = (
-                u.groupBy(*keys)
-                .agg(
-                    F.max_by(
-                        pack, F.struct(F.col(LSN_COL), F.col("_pri"))
-                    ).alias("_w")
-                )
-                .select("_w.*")
-            )
+            df = _latest_per_key(_residual(u, only=key_set), self.key_cols)
             # non-key filters only AFTER resolution
             df = _residual(df, only=set(ranges or {}) - key_set)
             if plain_sel:
@@ -523,10 +540,9 @@ class LakeTable:
 
     def lineage_records(self) -> list[dict[str, Any]]:
         """All per-commit lineage records, oldest first."""
-        meta = os.path.join(self.path, META_DIR)
         out = []
-        for name in sorted(f for f in os.listdir(meta) if f.startswith("v")):
-            with open(os.path.join(meta, name)) as fh:
+        for p in self._commit_paths():
+            with open(p) as fh:
                 c = json.load(fh)
             rec = dict(c.get("lineage") or {})
             rec["version"] = c["version"]
@@ -554,20 +570,14 @@ class LakeTable:
         )
 
     # ----------------------------------------------------------------- write
-    #: legacy fallback for tables committed before per-table stats_cols
-    #: existed (their commits carry no "stats_cols" key).
-    STATS_COLS = ("conv_id", LSN_COL)
-
     def _stat_cols(self) -> tuple[str, ...]:
         """Manifest-stat columns (Iceberg-style per-file min/max, used by
         ``read(ranges=...)`` to skip files): always the leading key column
         (file-level merge pruning keys on it) and the LSN column (snapshot-
         diff and tombstone-floor reasoning), plus any per-table columns
         chosen at ``create(stats_cols=...)`` — e.g. a timestamp a summary
-        table is range-queried by. Tables from older commits fall back to
-        the legacy class default."""
-        stored = self._state.get("stats_cols")
-        extra = tuple(stored) if stored is not None else self.STATS_COLS
+        table is range-queried by."""
+        extra = self._state.get("stats_cols") or ()
         return tuple(dict.fromkeys([self.key_cols[0], *extra, LSN_COL]))
 
     @staticmethod
@@ -628,9 +638,9 @@ class LakeTable:
         # ranges, which is what makes the manifest min/max file pruning in
         # ``merge_cdc``/``read(ranges=...)`` actually selective.
         # ``already_partitioned``: the caller's plan already ends in a
-        # bucket-aligned exchange (merge_cdc's single repartition on a
-        # murmur3 table) — repartitioning again here would re-shuffle the
-        # entire result for nothing, so trust the incoming task layout.
+        # bucket-aligned exchange (merge_cdc's single repartition) —
+        # repartitioning again here would re-shuffle the entire result for
+        # nothing, so trust the incoming task layout.
         if already_partitioned:
             out = df
         else:
@@ -689,17 +699,22 @@ class LakeTable:
     def append(self, spark: SparkSession, df: DataFrame, op: str = "append") -> dict[str, Any]:
         """Plain append (no key resolution) — the analog of the reference's
         staging bulk_insert (``/root/reference/src/database_manager.py:139-174``)."""
+        return {"files": len(self._write_rows(df, self.files, op))}
+
+    def _write_rows(
+        self, df: DataFrame, keep: list[dict[str, Any]], op: str
+    ) -> list[dict[str, Any]]:
+        """Write ``df``'s rows as they are under the additively evolved
+        schema (columns it lacks fill NULL) and commit them after the
+        ``keep`` entries. Returns the new file entries."""
         t0 = time.time()
         schema = self._evolved_schema(df.schema)
-        out = df
-        for f in schema.fields:
-            if f.name not in df.columns:
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        out = out.select([f.name for f in schema.fields])
-        out = out.withColumn(BUCKET_COL, self._bucket_id())
-        new_files = self._write_buckets(out, self.num_buckets)
+        out = df.select(*_conformed(df, schema))
+        new_files = self._write_buckets(
+            out.withColumn(BUCKET_COL, self._bucket_id()), self.num_buckets
+        )
         self._commit(
-            self.files + new_files,
+            keep + new_files,
             schema,
             self.summary,
             {
@@ -710,28 +725,19 @@ class LakeTable:
                 "wall_s": round(time.time() - t0, 3),
             },
         )
-        return {"files": len(new_files)}
+        return new_files
 
     # ------------------------------------------------------------------ CDC
-    def _merge_summary(
-        self, fence: tuple[str, int] | None, lsn_hi: int | None
-    ) -> dict[str, Any]:
-        """Snapshot summary for a merge commit: fence, O(1) maintenance
-        counter (merges since the last compact — restart-safe cadence
-        source, so streams never rescan the whole lineage per batch) and
-        the applied-LSN high-water mark (tombstone-purge floor source)."""
-        summary = self.summary
-        if fence is not None:
-            summary[f"fence:{fence[0]}"] = int(fence[1])
-        summary["merges_since_compact"] = (
-            int(summary.get("merges_since_compact", 0)) + 1
-        )
-        if lsn_hi is not None:
-            prev = summary.get("applied_lsn_max")
-            summary["applied_lsn_max"] = (
-                max(int(prev), int(lsn_hi)) if prev is not None else int(lsn_hi)
-            )
-        return summary
+    def fenced(self, fence: tuple[str, int] | None) -> dict[str, Any] | None:
+        """The no-op result for a batch this table already applied under
+        ``fence=(stream_id, batch_id)`` (its fence is at or past
+        ``batch_id``), else None."""
+        if fence is None:
+            return None
+        last = self.summary.get(f"fence:{fence[0]}")
+        if last is not None and int(last) >= int(fence[1]):
+            return {"applied": False, "reason": "fenced", "batch_id": fence[1]}
+        return None
 
     def merge_cdc(
         self,
@@ -765,7 +771,7 @@ class LakeTable:
 
         ``assume_deduped=True`` skips the internal LWW groupBy when the
         caller already reduced the batch to one row per key (the streaming
-        path does, with salting — see ``cdc.apply``). ``stats=(lo, hi, n)``
+        path does — see ``cdc.apply``). ``stats=(lo, hi, n)``
         passes the batch's LSN range + raw event count so no extra scan of
         ``events`` is needed for lineage. ``touched`` passes the batch's
         bucket ids when the caller precomputed them (fused into the stats
@@ -787,11 +793,9 @@ class LakeTable:
         """
         t0 = time.time()
         keys = self.key_cols
-        if fence is not None:
-            stream_id, batch_id = fence
-            last = self.summary.get(f"fence:{stream_id}")
-            if last is not None and int(last) >= int(batch_id):
-                return {"applied": False, "reason": "fenced", "batch_id": batch_id}
+        skipped = self.fenced(fence)
+        if skipped is not None:
+            return skipped
 
         payload_cols = [
             c for c in events.columns if c not in (op_col, lsn_col, BUCKET_COL)
@@ -804,7 +808,6 @@ class LakeTable:
         schema = self._evolved_schema(
             StructType([f for f in events.schema.fields if f.name in payload_cols])
         )
-        out_cols = [f.name for f in schema.fields]
 
         # --- 1. within-batch last-writer-wins dedup (SURVEY.md §2.5 W1) ----
         # groupBy + max_by(struct) instead of a row_number window: aggregation
@@ -838,12 +841,7 @@ class LakeTable:
             F.col(DELETED_COL),
         )
         if not assume_deduped:
-            pack = F.struct(*[F.col(c) for c in src.columns])
-            src = (
-                src.groupBy(*keys)
-                .agg(F.max_by(pack, F.col(LSN_COL)).alias("_w"))
-                .select("_w.*")
-            )
+            src = _latest_per_key(src.withColumn("_pri", F.lit(0)), keys)
 
         # --- 2. explicit partition + file pruning: which buckets does this
         # batch touch, and which files inside them can its key range reach?
@@ -862,154 +860,104 @@ class LakeTable:
             touched = sorted(set(touched))
 
         def _shape(df: DataFrame, pri: int | None) -> DataFrame:
-            cols = []
-            for name in out_cols:
-                if name in df.columns:
-                    cols.append(F.col(name))
-                else:
-                    typ = next(f.dataType for f in schema.fields if f.name == name)
-                    cols.append(F.lit(None).cast(typ).alias(name))
             extra = [] if pri is None else [F.lit(pri).alias("_pri")]
-            return df.select(*cols, F.col(BUCKET_COL), *extra)
+            return df.select(*_conformed(df, schema), F.col(BUCKET_COL), *extra)
 
-        def _resolve_stats(default) -> tuple:
-            if default is not None:
-                return default
-            row = events.agg(
-                F.min(lsn_col).alias("lo"),
-                F.max(lsn_col).alias("hi"),
-                F.count("*").alias("n"),
-            ).collect()[0]
-            return (
-                int(row["lo"]) if row["lo"] is not None else None,
-                int(row["hi"]) if row["hi"] is not None else None,
-                int(row["n"]),
-            )
-
+        in_touched = [f for f in self.files if f["bucket"] in set(touched)]
         if self.merge_mode == "mor":
             # ---- merge-on-read: append the reduced batch as delta files ----
             # No target read, no rewrite: write cost is O(batch rows). The
             # LSN guard moves to read()/compact() resolution; fencing and
             # lineage are identical to the COW path, so exactly-once replay
             # semantics don't depend on the mode.
+            rewrite: list[dict[str, Any]] = []
             new_files = self._write_buckets(
                 _shape(src, None), len(touched), kind="delta"
             )
-            lo, hi, n_events = _resolve_stats(stats)
-            summary = self._merge_summary(fence, hi)
-            # O(1)-readable depth signal for maintenance scheduling: a skewed
-            # stream can stack many deltas in ONE bucket between cadence
-            # hits, and read fan-in per key is bounded by delta depth — so
-            # the ingestor triggers bucket-scoped compaction on this, not
-            # just on merge count. Computed driver-side over the in-memory
-            # manifest (no Spark job).
-            _depths = Counter(
-                f["bucket"]
-                for f in self.files + new_files
-                if f.get("kind", "base") == "delta"
-            )
-            summary["delta_depth_max"] = max(_depths.values()) if _depths else 0
-            lineage = {
-                "op": "merge_cdc",
-                "mode": "mor",
-                "rows_written": sum(f.get("rows", 0) for f in new_files),
-                "n_events": n_events,
-                "buckets": touched,
-                "lsn_min": lo,
-                "lsn_max": hi,
-                "batch_fence": f"{fence[0]}:{fence[1]}" if fence else None,
-                "wall_s": round(time.time() - t0, 3),
-            }
-            if bucket_ranges:
-                lineage["bucket_lsn_ranges"] = {
-                    str(b): r for b, r in sorted(bucket_ranges.items())
-                }
-            self._commit(self.files + new_files, schema, summary, lineage)
-            return {
-                "applied": True,
-                "mode": "mor",
-                "events": n_events,
-                "buckets_touched": len(touched),
-                "files_rewritten": 0,
-                "files_written": len(new_files),
-            }
-
-        in_touched = [f for f in self.files if f["bucket"] in set(touched)]
-        klo = khi = None
-        if key_range is not None and key_range[0] is not None:
-            # same normalization as the manifest stats (dates -> ISO strings)
-            klo, khi = _stat_value(key_range[0]), _stat_value(key_range[1])
-        if klo is not None and khi is not None:
-
-            def _hit(f: dict[str, Any]) -> bool:
-                st = (f.get("stats") or {}).get(prune_key)
-                if st is None:
-                    return True  # no stats -> must rewrite (conservative)
-                return not (st["min"] > khi or st["max"] < klo)
-
-            rewrite = [f for f in in_touched if _hit(f)]
         else:
-            rewrite = in_touched
-        target = self._read_file_entries(spark, rewrite).withColumn(
-            BUCKET_COL, self._bucket_id()
-        )
+            klo = khi = None
+            if key_range is not None and key_range[0] is not None:
+                # same normalization as the manifest stats (dates -> ISO strings)
+                klo, khi = _stat_value(key_range[0]), _stat_value(key_range[1])
+            if klo is not None and khi is not None:
 
-        # --- 3. LSN-guarded resolution: union + max_by((lsn, pri)) ---------
-        # pri: target=1, source=0 -> on equal LSN the already-applied target
-        # row wins, making exact replays byte-stable no-ops.
-        #
-        # Shuffle plan (the scale-critical choice): on murmur3-bucketed
-        # tables the ONE explicit repartition below is the merge's ONLY
-        # exchange. Its partitioning (hash(bucket_cols) pmod num_buckets)
-        # simultaneously (a) satisfies the resolution agg's required
-        # ClusteredDistribution(keys) — bucket_cols is a subset of keys,
-        # enforced at create — so Catalyst inserts no second exchange, and
-        # (b) equals the bucket id itself (_bucket_expr fn="murmur3"), so
-        # every bucket lands wholly in exactly one task and the bucketed
-        # write needs no repartition either. Net: target+source payload
-        # bytes cross the wire ONCE instead of twice (resolution exchange
-        # + write repartition), which is the dominant inter-executor
-        # traffic of a COW merge on a real cluster. Pre-round-4 xxhash64
-        # tables keep the original two-exchange plan.
-        combined = _shape(target, 1).unionByName(_shape(src, 0))
-        aligned = self.bucket_fn == "murmur3"
-        if aligned:
-            combined = combined.repartition(
-                self.num_buckets, *[F.col(c) for c in self.bucket_cols]
-            )
-        pack2 = F.struct(*[F.col(c) for c in combined.columns if c != "_pri"])
-        merged = (
-            combined.groupBy(*keys)
-            .agg(
-                F.max_by(
-                    pack2, F.struct(F.col(LSN_COL), F.col("_pri"))
-                ).alias("_w")
-            )
-            .select("_w.*")
-        )
+                def _hit(f: dict[str, Any]) -> bool:
+                    st = (f.get("stats") or {}).get(prune_key)
+                    if st is None:
+                        return True  # no stats -> must rewrite (conservative)
+                    return not (st["min"] > khi or st["max"] < klo)
 
-        # --- 4. rewrite only the overlapping files, swap atomically --------
-        # With a recorded target_file_rows the rewrite keeps the table's
-        # file granularity instead of collapsing each touched bucket to one
-        # file: key-sorted within the (aligned, one-bucket) task + split at
-        # the target. No extra shuffle either way; the sort rides inside
-        # the write stage (Iceberg's sorted-write compaction, applied at
-        # merge time so rewrite fractions stay ~window+1/F between
-        # compactions — scale_proof phase B).
-        tfr = self.target_file_rows
-        new_files = self._write_buckets(
-            merged,
-            len(touched),
-            sort_cols=self.key_cols if tfr else None,
-            max_records_per_file=tfr,
-            already_partitioned=aligned,
-        )
-        lo, hi, n_events = _resolve_stats(stats)
+                rewrite = [f for f in in_touched if _hit(f)]
+            else:
+                rewrite = in_touched
+            target = self._read_file_entries(spark, rewrite).withColumn(
+                BUCKET_COL, self._bucket_id()
+            )
+
+            # --- 3. LSN-guarded resolution: target (pri 1) + batch (pri 0) --
+            # Shuffle plan (the scale-critical choice): the ONE explicit
+            # repartition below is the merge's ONLY exchange. Its
+            # partitioning (hash(bucket_cols) pmod num_buckets)
+            # simultaneously (a) satisfies the resolution agg's required
+            # ClusteredDistribution(keys) — bucket_cols is a subset of keys,
+            # enforced at create — so Catalyst inserts no second exchange,
+            # and (b) equals the bucket id itself (_bucket_expr), so every
+            # bucket lands wholly in exactly one task and the bucketed write
+            # needs no repartition either. Net: target+source payload bytes
+            # cross the wire ONCE instead of twice (resolution exchange +
+            # write repartition), which is the dominant inter-executor
+            # traffic of a COW merge on a real cluster.
+            merged = _latest_per_key(
+                _shape(target, 1)
+                .unionByName(_shape(src, 0))
+                .repartition(self.num_buckets, *[F.col(c) for c in self.bucket_cols]),
+                keys,
+            )
+
+            # --- 4. rewrite only the overlapping files ---------------------
+            # With a recorded target_file_rows the rewrite keeps the table's
+            # file granularity instead of collapsing each touched bucket to
+            # one file: key-sorted within the (aligned, one-bucket) task +
+            # split at the target. No extra shuffle either way; the sort
+            # rides inside the write stage (Iceberg's sorted-write
+            # compaction, applied at merge time so rewrite fractions stay
+            # ~window+1/F between compactions — scale_proof phase B).
+            tfr = self.target_file_rows
+            new_files = self._write_buckets(
+                merged,
+                len(touched),
+                sort_cols=self.key_cols if tfr else None,
+                max_records_per_file=tfr,
+                already_partitioned=True,
+            )
+
+        # --- 5. swap the files atomically ----------------------------------
+        if stats is None:
+            row = events.agg(
+                F.min(lsn_col).alias("lo"),
+                F.max(lsn_col).alias("hi"),
+                F.count("*").alias("n"),
+            ).collect()[0]
+            stats = (
+                int(row["lo"]) if row["lo"] is not None else None,
+                int(row["hi"]) if row["hi"] is not None else None,
+                int(row["n"]),
+            )
+        lo, hi, n_events = stats
         doomed = {f["path"] for f in rewrite}
-        keep = [f for f in self.files if f["path"] not in doomed]
-        summary = self._merge_summary(fence, hi)
+        # the fence, the O(1) cadence counter (merges since the last
+        # compact — restart-safe, so streams never rescan lineage per
+        # batch) and the applied-LSN high-water mark (tombstone-purge
+        # floor source) commit atomically with the data
+        summary = self.summary
+        if fence is not None:
+            summary[f"fence:{fence[0]}"] = int(fence[1])
+        summary["merges_since_compact"] = int(summary.get("merges_since_compact", 0)) + 1
+        if hi is not None:
+            summary["applied_lsn_max"] = max(int(summary.get("applied_lsn_max", hi)), int(hi))
         lineage = {
             "op": "merge_cdc",
+            "mode": self.merge_mode,
             # rows_written = rows physically written (incl. tombstones),
             # exact and free from the parquet footers; n_events = raw
             # pre-dedup event count — two fields, two stable meanings.
@@ -1027,9 +975,15 @@ class LakeTable:
             lineage["bucket_lsn_ranges"] = {
                 str(b): r for b, r in sorted(bucket_ranges.items())
             }
-        self._commit(keep + new_files, schema, summary, lineage)
+        self._commit(
+            [f for f in self.files if f["path"] not in doomed] + new_files,
+            schema,
+            summary,
+            lineage,
+        )
         return {
             "applied": True,
+            "mode": self.merge_mode,
             "events": n_events,
             "buckets_touched": len(touched),
             "files_rewritten": len(rewrite),
@@ -1050,7 +1004,9 @@ class LakeTable:
         delete LSN is below the watermark — the engine's
         ``rewrite_data_files`` + tombstone GC (SURVEY.md §7.2). On a MOR
         table this also folds all delta files into base (the resolved read
-        is the input). Three layout levers, all atomic with the rewrite:
+        is the input). Resets the cadence counter
+        (``merges_since_compact``). Three layout levers, all atomic with
+        the rewrite:
 
         * ``num_buckets`` — bucket-count evolution (Iceberg partition-spec
           evolution): the 100 TB growth path is exactly this, 16 buckets at
@@ -1065,7 +1021,8 @@ class LakeTable:
           key ranges, which is what makes manifest min/max pruning in
           ``read(ranges=...)`` and the file-scoped COW merge selective:
           a narrow-key batch then rewrites one file per bucket, not the
-          whole bucket.
+          whole bucket. The pair is recorded as the table's file
+          granularity, which later COW merges keep.
 
         Sizing guidance (measured, ``tools/scale_proof.py`` phase B): with
         F sorted files per bucket, a batch updating ``window_frac`` of the
@@ -1077,67 +1034,16 @@ class LakeTable:
         footer overhead stays negligible: tens of thousands of rows or
         ~10-100 MB at cluster scale).
         """
-        t0 = time.time()
-        df = self.read(spark, include_deleted=True, include_meta=True)
-        if purge_tombstones_below_lsn is not None:
-            # the lsn comparison must coalesce too: for a tombstone with
-            # NULL last_lsn (bulk-appended rows), true & NULL = NULL and
-            # ~NULL filters the row out — i.e. the tombstone would be
-            # purged UNCONDITIONALLY, ignoring the floor, and a later
-            # stale insert could resurrect the key. NULL-lsn rows are
-            # never purged (their position is unknown).
-            df = df.filter(
-                ~(
-                    F.coalesce(F.col(DELETED_COL), F.lit(False))
-                    & F.coalesce(
-                        F.col(LSN_COL) < F.lit(purge_tombstones_below_lsn),
-                        F.lit(False),
-                    )
-                )
-            )
-        nb = num_buckets or self.num_buckets
-        df = df.withColumn(BUCKET_COL, self._bucket_id(nb))
-        new_files = self._write_buckets(
-            df,
-            nb,
-            sort_cols=self.key_cols if sort_within_buckets else None,
-            max_records_per_file=target_file_rows,
+        new_files = self._compact(
+            spark, None, purge_tombstones_below_lsn, sort_within_buckets,
+            target_file_rows, num_buckets,
         )
-        partition = None
-        if num_buckets is not None and num_buckets != self.num_buckets:
-            partition = {"bucket_cols": self.bucket_cols, "num_buckets": nb, "bucket_fn": self.bucket_fn}
-        summary = self.summary
-        summary["merges_since_compact"] = 0  # cadence counter resets here
-        summary["delta_depth_max"] = 0  # all deltas folded into base
-        extra = None
-        if target_file_rows and sort_within_buckets:
-            # a sorted+split compaction establishes the table's file
-            # granularity — record it so later COW merges preserve it
-            extra = {"target_file_rows": int(target_file_rows)}
-        self._commit(
-            new_files,
-            self.schema,
-            summary,
-            {
-                "op": "compact",
-                "rows_written": sum(f.get("rows", 0) for f in new_files),
-                "buckets": sorted({f["bucket"] for f in new_files}),
-                "num_buckets": nb,
-                "wall_s": round(time.time() - t0, 3),
-            },
-            partition=partition,
-            extra_state=extra,
-        )
-        return {"files": len(new_files), "num_buckets": nb}
+        return {"files": len(new_files), "num_buckets": self.num_buckets}
 
     def delta_depths(self) -> dict[int, int]:
         """Per-bucket count of live delta files (MOR read fan-in), from the
         in-memory manifest — no Spark job, no file listing."""
-        return dict(
-            Counter(
-                f["bucket"] for f in self.files if f.get("kind", "base") == "delta"
-            )
-        )
+        return _delta_depths(self.files)
 
     def compact_buckets(
         self,
@@ -1164,12 +1070,32 @@ class LakeTable:
         (``merges_since_compact``) — this is partial maintenance, not the
         scheduled table-wide rewrite.
         """
-        t0 = time.time()
-        want = set(buckets)
-        keep = [f for f in self.files if f["bucket"] not in want]
-        df = self.read(
-            spark, include_deleted=True, include_meta=True, buckets=sorted(want)
+        want = sorted(set(buckets))
+        new_files = self._compact(
+            spark, want, purge_tombstones_below_lsn, sort_within_buckets,
+            target_file_rows,
         )
+        return {"files": len(new_files), "buckets": want}
+
+    def _compact(
+        self,
+        spark: SparkSession,
+        scope: list[int] | None,
+        purge_tombstones_below_lsn: int | None,
+        sort_within_buckets: bool,
+        target_file_rows: int | None,
+        num_buckets: int | None = None,
+    ) -> list[dict[str, Any]]:
+        """Shared body of ``compact`` (``scope=None``: every bucket) and
+        ``compact_buckets`` (``scope``: the sorted bucket ids): resolved
+        read -> tombstone purge -> base-file write -> one commit that
+        carries every out-of-scope file over. Only a full compaction resets
+        the cadence counter, evolves the bucket count and records the file
+        granularity. Returns the new file entries."""
+        t0 = time.time()
+        full = scope is None
+        nb = num_buckets or self.num_buckets
+        df = self.read(spark, include_deleted=True, include_meta=True, buckets=scope)
         if purge_tombstones_below_lsn is not None:
             # the lsn comparison must coalesce too: for a tombstone with
             # NULL last_lsn (bulk-appended rows), true & NULL = NULL and
@@ -1186,31 +1112,38 @@ class LakeTable:
                     )
                 )
             )
-        df = df.withColumn(BUCKET_COL, self._bucket_id())
         new_files = self._write_buckets(
-            df,
-            len(want),  # one shuffle partition per compacted bucket
+            df.withColumn(BUCKET_COL, self._bucket_id(nb)),
+            nb if full else len(scope),  # one shuffle partition per bucket
             sort_cols=self.key_cols if sort_within_buckets else None,
             max_records_per_file=target_file_rows,
         )
-        all_files = keep + new_files
         summary = self.summary
-        depths = Counter(
-            f["bucket"] for f in all_files if f.get("kind", "base") == "delta"
-        )
-        summary["delta_depth_max"] = max(depths.values()) if depths else 0
+        lineage = {
+            "op": "compact" if full else "compact_buckets",
+            "rows_written": sum(f.get("rows", 0) for f in new_files),
+            "buckets": scope,
+        }
+        keep = []
+        partition = extra = None
+        if full:
+            summary["merges_since_compact"] = 0  # cadence counter resets here
+            lineage["buckets"] = sorted({f["bucket"] for f in new_files})
+            lineage["num_buckets"] = nb
+            if nb != self.num_buckets:
+                partition = {**self._state["partition"], "num_buckets": nb}
+            if target_file_rows and sort_within_buckets:
+                # a sorted+split compaction establishes the table's file
+                # granularity — record it so later COW merges preserve it
+                extra = {"target_file_rows": int(target_file_rows)}
+        else:
+            keep = [f for f in self.files if f["bucket"] not in set(scope)]
+        lineage["wall_s"] = round(time.time() - t0, 3)
         self._commit(
-            all_files,
-            self.schema,
-            summary,
-            {
-                "op": "compact_buckets",
-                "rows_written": sum(f.get("rows", 0) for f in new_files),
-                "buckets": sorted(want),
-                "wall_s": round(time.time() - t0, 3),
-            },
+            keep + new_files, self.schema, summary, lineage,
+            partition=partition, extra_state=extra,
         )
-        return {"files": len(new_files), "buckets": sorted(want)}
+        return new_files
 
     def vacuum(self, grace_seconds: float = 600.0) -> int:
         """Delete data files referenced by NO retained snapshot (including
@@ -1223,15 +1156,13 @@ class LakeTable:
         freshly written data (``_write_buckets`` runs BEFORE its commit
         publishes) survives a concurrent vacuum. Pass 0 only when all
         writers are known quiesced."""
-        meta = os.path.join(self.path, META_DIR)
         live: set[str] = set()
-        for name in os.listdir(meta):
-            if name.startswith("v") and name.endswith(".json"):
-                with open(os.path.join(meta, name)) as fh:
-                    commit = json.load(fh)
-                live |= {
-                    os.path.join(self.path, f["path"]) for f in commit.get("files", [])
-                }
+        for p in self._commit_paths():
+            with open(p) as fh:
+                commit = json.load(fh)
+            live |= {
+                os.path.join(self.path, f["path"]) for f in commit.get("files", [])
+            }
         removed = 0
         cutoff = time.time() - grace_seconds
         data_root = os.path.join(self.path, DATA_DIR)

@@ -14,8 +14,8 @@ Scale notes (100 TB / 10^10 events):
 * the file source lists only new files per trigger; ``maxFilesPerTrigger``
   bounds micro-batch size (the principled version of the reference's
   ``BATCH_SIZE=1000`` chunking, ``/root/reference/config/config.py:43``),
-* each micro-batch shuffles once for LWW dedup (salted) and rewrites only
-  the buckets it touches,
+* each micro-batch shuffles once for LWW dedup (map-side combined) and
+  rewrites only the buckets it touches,
 * ``Trigger.AvailableNow`` gives bounded replay/backfill with the same code
   path as continuous tailing.
 """
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..cdc.apply import apply_batch
-from ..lakehouse.table import LakeTable
+from ..lakehouse.table import CommitConflict, LakeTable
 
 
 class CdcStreamIngestor:
@@ -44,7 +44,6 @@ class CdcStreamIngestor:
         max_files_per_trigger: int | None = None,
         source_format: str = "parquet",
         source_options: dict | None = None,
-        n_salts: int = 1,
         fail_after_merge: bool = False,
         rules: dict | None = None,
         strict_validation: bool = False,
@@ -63,7 +62,6 @@ class CdcStreamIngestor:
         self.max_files_per_trigger = max_files_per_trigger
         self.source_format = source_format
         self.source_options = dict(source_options or {})
-        self.n_salts = n_salts
         # test hook: simulate a crash AFTER the merge commit but BEFORE the
         # checkpoint advances — the adversarial window for exactly-once.
         self.fail_after_merge = fail_after_merge
@@ -119,24 +117,19 @@ class CdcStreamIngestor:
         self._refresh_deferrals: dict[int, list[str]] = {}
         self.batches: list[dict[str, Any]] = []
 
-    def _merges_since_last_compact(self) -> int:
-        """Compaction cadence from TABLE STATE, not in-memory state —
-        survives stream restarts from checkpoint (an in-memory batch
-        counter would reset every restart, so a stream bounced each N-1
-        batches would never compact). Reads the O(1) snapshot-summary
-        counter (maintained by merge_cdc, reset by compact); tables written
-        before the counter existed fall back to walking lineage newest-
-        first, stopping at the first compact commit."""
-        s = self.table.summary
-        if "merges_since_compact" in s:
-            return int(s["merges_since_compact"])
-        n = 0
-        for rec in reversed(self.table.lineage_records()):
-            if rec.get("op") == "compact":
-                break
-            if rec.get("op") == "merge_cdc":
-                n += 1
-        return n
+    @staticmethod
+    def _retry_on_conflict(attempt):
+        """Run one maintenance commit ``attempt()`` — which re-reads the
+        table it commits to — with ONE retry after a lost optimistic-
+        concurrency race; None when both attempts lost. Maintenance runs
+        after the batch's merge has committed, so a lost race must never
+        kill the stream: the caller defers to a later batch instead."""
+        for _ in range(2):
+            try:
+                return attempt()
+            except CommitConflict:
+                pass
+        return None
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -155,62 +148,40 @@ class CdcStreamIngestor:
                     f"batch {batch_id} failed validation: {report['issues']}"
                 )
         stats = apply_batch(
-            self.table,
-            spark,
-            batch_df,
-            fence=(self.stream_id, int(batch_id)),
-            n_salts=self.n_salts,
+            self.table, spark, batch_df, fence=(self.stream_id, int(batch_id))
         )
         stats["batch_id"] = int(batch_id)
         if report is not None:
             stats["validation"] = report
         self.batches.append(stats)
+        summary = self.table.summary
+        attempt = None
+        # Compaction cadence comes from TABLE STATE (the snapshot-summary
+        # counter merge_cdc maintains and compact resets), not in-memory
+        # state — so it survives stream restarts from checkpoint (an
+        # in-memory counter would reset every restart, and a stream
+        # bounced each N-1 batches would never compact).
         if (
             self.compact_every
             and stats.get("applied")
-            and self._merges_since_last_compact() >= self.compact_every
+            and int(summary.get("merges_since_compact", 0)) >= self.compact_every
         ):
             # A tombstone at LSN X may only be purged once no event with
             # lsn <= X can still arrive; the bound on out-of-order arrival
             # is the operator's knowledge, expressed as tombstone_lsn_lag:
             # floor = max applied LSN - lag. Default (None) keeps all
-            # tombstones.
+            # tombstones, and so does a table with no applied LSN yet.
+            hi = summary.get("applied_lsn_max")
             floor = None
-            if self.tombstone_lsn_lag is not None:
-                hi = self.table.summary.get("applied_lsn_max")
-                if hi is None:  # pre-HWM tables: derive from lineage once
-                    hi = max(
-                        (
-                            r["lsn_max"]
-                            for r in self.table.lineage_records()
-                            if r.get("lsn_max") is not None
-                        ),
-                        default=None,
-                    )
-                if hi is not None:
-                    floor = int(hi) - self.tombstone_lsn_lag
-            # Compaction is best-effort maintenance: the batch's merge has
-            # already committed, so a lost optimistic-concurrency race here
-            # must never kill the stream — refresh and retry once, then
-            # defer to the next cadence hit.
-            from ..lakehouse.table import CommitConflict
-
-            for attempt in range(2):
-                try:
-                    stats["compacted"] = self.table.compact(
-                        spark, purge_tombstones_below_lsn=floor
-                    )
-                    break
-                except CommitConflict:
-                    if attempt == 0:
-                        self.table.refresh()
-                    else:
-                        stats["compact_deferred"] = "commit conflict"
+            if self.tombstone_lsn_lag is not None and hi is not None:
+                floor = int(hi) - self.tombstone_lsn_lag
+            key, attempt = "compacted", lambda: self.table.refresh().compact(
+                spark, purge_tombstones_below_lsn=floor
+            )
         elif (
             self.max_delta_depth is not None
             and stats.get("applied")
-            and int(self.table.summary.get("delta_depth_max", 0))
-            > self.max_delta_depth
+            and int(summary.get("delta_depth_max", 0)) > self.max_delta_depth
         ):
             # depth-triggered partial maintenance: fold ONLY the deep
             # buckets — O(hot-bucket bytes), not O(table) — so a Zipf-hot
@@ -220,22 +191,17 @@ class CdcStreamIngestor:
                 for b, d in self.table.delta_depths().items()
                 if d > self.max_delta_depth
             )
-            from ..lakehouse.table import CommitConflict
-
-            for attempt in range(2):
-                try:
-                    stats["compacted_buckets"] = self.table.compact_buckets(
-                        spark, deep
-                    )
-                    break
-                except CommitConflict:
-                    if attempt == 0:
-                        self.table.refresh()
-                    else:
-                        stats["compact_deferred"] = "commit conflict"
+            key, attempt = "compacted_buckets", lambda: (
+                self.table.refresh().compact_buckets(spark, deep)
+            )
+        if attempt is not None:
+            done = self._retry_on_conflict(attempt)
+            if done is None:
+                stats["compact_deferred"] = "commit conflict"
+            else:
+                stats[key] = done
         if self.summaries and stats.get("applied"):
             from ..lakehouse.maintain import refresh_summary_incremental
-            from ..lakehouse.table import CommitConflict
 
             refreshed = []
             for si, spec in enumerate(self.summaries):
@@ -251,10 +217,9 @@ class CdcStreamIngestor:
                 # on every batch = silent unbounded staleness), so the
                 # same spec deferring max_refresh_deferrals batches in a
                 # row escalates with every recorded reason.
-                outcome = None
-                for attempt in range(2):
-                    try:
-                        outcome = refresh_summary_incremental(
+                try:
+                    outcome = self._retry_on_conflict(
+                        lambda: refresh_summary_incremental(
                             spec["summary"].refresh(),
                             spark,
                             self.table,
@@ -263,15 +228,10 @@ class CdcStreamIngestor:
                             derive=spec.get("derive"),
                             stream_id=spec.get("stream_id", "mv"),
                         )
-                        break
-                    except CommitConflict:
-                        if attempt == 1:
-                            outcome = {"mode": "deferred",
-                                       "reason": "commit conflict"}
-                    except Exception as e:  # noqa: BLE001 — see comment
-                        outcome = {"mode": "deferred",
-                                   "reason": f"{type(e).__name__}: {e}"}
-                        break
+                    ) or {"mode": "deferred", "reason": "commit conflict"}
+                except Exception as e:  # noqa: BLE001 — see comment
+                    outcome = {"mode": "deferred",
+                               "reason": f"{type(e).__name__}: {e}"}
                 refreshed.append(outcome)
                 if outcome.get("mode") == "deferred":
                     log = self._refresh_deferrals.setdefault(si, [])
@@ -290,7 +250,9 @@ class CdcStreamIngestor:
         if self.fail_after_merge:
             raise RuntimeError("injected crash between merge commit and checkpoint")
 
-    def _reader(self, spark: SparkSession):
+    def _start(self, spark: SparkSession, **trigger):
+        """Start the ingest loop (``_apply`` per micro-batch) under the
+        given trigger."""
         reader = (
             spark.readStream.schema(self.event_schema).format(self.source_format)
         )
@@ -298,20 +260,19 @@ class CdcStreamIngestor:
             reader = reader.option(k, v)
         if self.max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.load(self.source_dir)
+        return (
+            reader.load(self.source_dir)
+            .writeStream.foreachBatch(self._apply)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
 
     def run_available_now(self, spark: SparkSession) -> list[dict[str, Any]]:
         """Process everything currently in the log, then stop (bounded
         replay). Re-running with the same checkpoint resumes where the last
         run stopped — including after a crash mid-batch."""
-        query = (
-            self._reader(spark)
-            .writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        self._start(spark, availableNow=True).awaitTermination()
         return self.batches
 
     def start_continuous(self, spark: SparkSession, processing_time: str = "1 seconds"):
@@ -324,10 +285,4 @@ class CdcStreamIngestor:
         ``run_available_now`` path — a restart from the same checkpoint
         resumes at the next unread file, and a replayed micro-batch hits
         its fence and no-ops."""
-        return (
-            self._reader(spark)
-            .writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
+        return self._start(spark, processingTime=processing_time)

@@ -225,6 +225,27 @@ def test_mor_schema_evolution_mid_log(spark, tmp_path):
     assert "tool" in [f.name for f in mor.schema.fields]
 
 
+def _hot_stream(spark, tmp_path):
+    """One cold conversation, then a hot stream on a single conversation,
+    written as 9 single-row-group files (-> 9 micro-batches hitting the
+    hot bucket). Returns (events, source dir)."""
+    import datetime as dt
+
+    ddl = ("pos long, op string, lsn long, conv_id string, turn_idx int, "
+           "role string, text string, tool string, ts timestamp")
+    ts = dt.datetime(2026, 1, 1)
+    cold = [(0, "I", 0, "cold", 0, "user", "cold row", None, ts)]
+    hot = [
+        (i + 1, "I" if i < 8 else "U", i + 1, "hot", i % 8, "user",
+         f"text v{i}", None, ts)
+        for i in range(32)
+    ]
+    src = str(tmp_path / "log")
+    df = spark.createDataFrame(cold + hot, ddl)
+    df.orderBy("pos").repartitionByRange(9, "pos").write.parquet(src)
+    return df, src
+
+
 def test_mor_depth_triggered_bucket_compaction(spark, tmp_path):
     """A hot-bucket stream (every event in ONE conversation) must not stack
     unbounded deltas between cadence hits: max_delta_depth triggers
@@ -232,26 +253,11 @@ def test_mor_depth_triggered_bucket_compaction(spark, tmp_path):
     buckets' files stay untouched (VERDICT r2 next-round #7)."""
     from sql_etl_pipeline_spark.streaming import CdcStreamIngestor
 
-    ddl = ("pos long, op string, lsn long, conv_id string, turn_idx int, "
-           "role string, text string, tool string, ts timestamp")
-    import datetime as dt
-
-    ts = dt.datetime(2026, 1, 1)
-    # one cold conversation first, then a hot stream on a single conv
-    cold = [(0, "I", 0, "cold", 0, "user", "cold row", None, ts)]
-    hot = [
-        (i + 1, "I" if i < 8 else "U", i + 1, "hot", i % 8, "user",
-         f"text v{i}", None, ts)
-        for i in range(32)
-    ]
     mor = LakeTable.create(
         str(tmp_path / "mor"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"],
         num_buckets=8, merge_mode="mor",
     )
-    src = str(tmp_path / "log")
-    df = spark.createDataFrame(cold + hot, ddl)
-    # 9 single-row-group files -> many micro-batches hitting the hot bucket
-    df.orderBy("pos").repartitionByRange(9, "pos").write.parquet(src)
+    df, src = _hot_stream(spark, tmp_path)
     K = 2
     ing = CdcStreamIngestor(
         mor, src, str(tmp_path / "ckpt"), df.schema,
@@ -271,3 +277,53 @@ def test_mor_depth_triggered_bucket_compaction(spark, tmp_path):
     for j in range(8):
         winner = max(i for i in range(32) if i % 8 == j)
         assert state[("hot", j)] == f"text v{winner}"
+
+
+def test_mor_bucket_compaction_conflict_retries_then_defers(spark, tmp_path, monkeypatch):
+    """Depth-triggered compaction is best-effort maintenance after the
+    batch's merge has committed: a lost commit race is retried once, a
+    second loss defers it (``compact_deferred``) without killing the
+    stream, and a later batch compacts again. The final table still equals
+    the one-shot oracle."""
+    from sql_etl_pipeline_spark.lakehouse.table import CommitConflict
+    from sql_etl_pipeline_spark.streaming import CdcStreamIngestor
+
+    real = LakeTable.compact_buckets
+    lose = {1, 3, 4}  # calls (1-based) that lose the race
+    calls = []
+
+    def racy(self, *args, **kwargs):
+        calls.append(self.version)
+        if len(calls) in lose:
+            raise CommitConflict("injected: another writer published first")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "compact_buckets", racy)
+    mor = LakeTable.create(
+        str(tmp_path / "mor"), TRANSCRIPT_SCHEMA, key_cols=["conv_id", "turn_idx"],
+        num_buckets=8, merge_mode="mor",
+    )
+    df, src = _hot_stream(spark, tmp_path)
+    ing = CdcStreamIngestor(
+        mor, src, str(tmp_path / "ckpt"), df.schema,
+        stream_id="hot", max_files_per_trigger=1, max_delta_depth=2,
+    )
+    batches = ing.run_available_now(spark)
+    assert len(batches) == 9 and all(b["applied"] for b in batches)
+    maint = [
+        i for i, b in enumerate(batches)
+        if "compacted_buckets" in b or "compact_deferred" in b
+    ]
+    # call 1 lost, its retry (call 2) compacted
+    assert "compacted_buckets" in batches[maint[0]]
+    assert "compact_deferred" not in batches[maint[0]]
+    # calls 3 and 4 both lost: deferred, and the stream went on
+    assert batches[maint[1]]["compact_deferred"] == "commit conflict"
+    assert "compacted_buckets" not in batches[maint[1]]
+    # the still-deep bucket compacts on a later batch
+    assert any("compacted_buckets" in batches[i] for i in maint[2:])
+    assert len(calls) >= 5
+    assert [r["op"] for r in mor.lineage_records()].count("compact_buckets") == (
+        len(calls) - len(lose)
+    )
+    assert _state(mor, spark) == _oracle(df)

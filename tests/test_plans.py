@@ -10,6 +10,7 @@ must be visible in `explain`, not assumed.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = os.environ.get("SF_SMOKE_DIR", "/root/testdata/sf0.001")
@@ -252,7 +253,7 @@ def test_split_compaction_files_disjoint_within_every_bucket(spark, tmp_path):
 
 def test_murmur3_bucket_id_equals_spark_partition_id(spark):
     """The aligned single-shuffle merge rests on one identity: the table's
-    bucket expression (fn="murmur3") must equal Spark's HashPartitioning
+    bucket expression (murmur3) must equal Spark's HashPartitioning
     partition-id function for repartition(B, *bucket_cols). If Spark ever
     changed its hash/seed/pmod, merges would silently write rows into the
     wrong bucket directories — this locks the identity row-exactly."""
@@ -266,7 +267,7 @@ def test_murmur3_bucket_id_equals_spark_partition_id(spark):
         r = (
             df.repartition(b, *[F.col(c) for c in cols])
             .withColumn("pid", F.spark_partition_id())
-            .withColumn("bid", _bucket_expr(cols, b, "murmur3"))
+            .withColumn("bid", _bucket_expr(cols, b))
         )
         assert r.filter(F.col("pid") != F.col("bid")).count() == 0
 
@@ -287,7 +288,7 @@ def test_cow_merge_plan_has_single_exchange_and_one_file_per_bucket(spark, tmp_p
 
     nb = 8
     ev = generate_change_events(spark, 6000, n_convs=300).withColumn(
-        BUCKET_COL, _bucket_expr(["conv_id"], nb, "murmur3")
+        BUCKET_COL, _bucket_expr(["conv_id"], nb)
     ).withColumn(LSN_COL, F.col("lsn")).withColumn("_pri", F.lit(0))
     # mirror of merge_cdc step 3 on a murmur3 table
     combined = ev.repartition(nb, F.col("conv_id"))
@@ -303,7 +304,7 @@ def test_cow_merge_plan_has_single_exchange_and_one_file_per_bucket(spark, tmp_p
         str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
         key_cols=["conv_id", "turn_idx"], num_buckets=nb,
     )
-    assert t.bucket_fn == "murmur3"
+    assert t._state["partition"]["bucket_fn"] == "murmur3"
     res = apply_batch(t, spark, generate_change_events(spark, 6000, n_convs=300),
                       fence=("s", 0))
     assert res["applied"]
@@ -313,52 +314,33 @@ def test_cow_merge_plan_has_single_exchange_and_one_file_per_bucket(spark, tmp_p
     assert max(per_bucket.values()) == 1, per_bucket
 
 
-def test_xxhash64_table_back_compat_merge(spark, tmp_path):
-    """A table whose partition spec predates bucket_fn (round <=3 layout)
-    must keep resolving rows to xxhash64 buckets and merge through the
-    original two-exchange path — otherwise existing files would be pruned
-    against the wrong bucket ids and stale versions survive merges."""
+def test_legacy_bucket_layout_is_rejected(tmp_path):
+    """Only murmur3 bucket layouts are readable: a commit whose partition
+    spec lacks ``bucket_fn`` (the pre-murmur3 layout) or names another hash
+    must fail loudly on load — resolving its files under murmur3 would
+    prune merges against the wrong bucket ids and keep stale versions."""
     import json
     import os as _os
 
-    from sql_etl_pipeline_spark.cdc import TRANSCRIPT_SCHEMA, generate_change_events
-    from sql_etl_pipeline_spark.cdc.apply import apply_batch
+    from sql_etl_pipeline_spark.cdc import TRANSCRIPT_SCHEMA
     from sql_etl_pipeline_spark.lakehouse import LakeTable
 
-    t = LakeTable.create(
-        str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
-        key_cols=["conv_id", "turn_idx"], num_buckets=8,
-    )
-    v1 = _os.path.join(t.path, "_meta", "v00000001.json")
-    with open(v1) as fh:
-        c = json.load(fh)
-    del c["partition"]["bucket_fn"]
-    with open(v1, "w") as fh:
-        json.dump(c, fh)
-    t = LakeTable(t.path)
-    assert t.bucket_fn == "xxhash64"
-    ev = generate_change_events(spark, 4000, n_convs=200, delete_frac=0.01)
-    apply_batch(t, spark, ev.filter(F.col("lsn") % 2 == 0), fence=("s", 1))
-    apply_batch(t, spark, ev.filter(F.col("lsn") % 2 == 1), fence=("s", 2))
-    # LWW oracle in plain Spark
-    from sql_etl_pipeline_spark.cdc.apply import prepare_events
-
-    pe = prepare_events(ev)
-    pack = F.struct(*[F.col(c) for c in pe.columns])
-    want = (
-        pe.groupBy("conv_id", "turn_idx")
-        .agg(F.max_by(pack, F.col("lsn")).alias("w"))
-        .select("w.*")
-        .filter(F.col("op") != "D")
-    )
-    got = t.read(spark)
-    assert got.count() == want.count()
-    assert (
-        want.select("conv_id", "turn_idx", "text")
-        .exceptAll(got.select("conv_id", "turn_idx", "text"))
-        .count()
-        == 0
-    )
+    for i, legacy in enumerate((None, "xxhash64")):
+        t = LakeTable.create(
+            str(tmp_path / f"t{i}"), TRANSCRIPT_SCHEMA,
+            key_cols=["conv_id", "turn_idx"], num_buckets=8,
+        )
+        v1 = _os.path.join(t.path, "_meta", "v00000001.json")
+        with open(v1) as fh:
+            c = json.load(fh)
+        if legacy is None:
+            del c["partition"]["bucket_fn"]
+        else:
+            c["partition"]["bucket_fn"] = legacy
+        with open(v1, "w") as fh:
+            json.dump(c, fh)
+        with pytest.raises(ValueError, match=f"t{i}.*bucket_fn"):
+            LakeTable(t.path)
 
 
 def test_merge_preserves_recorded_file_granularity(spark, tmp_path):

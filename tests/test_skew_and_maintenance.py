@@ -164,7 +164,7 @@ def test_rebucket_compaction_partition_evolution(spark, tmp_path):
 
     full = table.read(spark)
     want = (
-        full.withColumn("_b", _bucket_expr(table.bucket_cols, 8, table.bucket_fn))
+        full.withColumn("_b", _bucket_expr(table.bucket_cols, 8))
         .filter(F.col("_b").isin([0, 3, 5]))
         .count()
     )
